@@ -494,47 +494,6 @@ builtin_registry = wow_registry
 # -- the wow builder ----------------------------------------------------------
 
 
-def _run_scripts(
-    spark, resolver, scripts, function_stmts, functions=None
-) -> list[str]:
-    """Transpile + run every statement of each Postgres-dialect script;
-    function DDL is collected for post-publish replay (reference
-    wowutil.py:170-181). With ``functions`` (a FunctionRegistry),
-    table-function calls in FROM position are materialized to temp
-    views first, so reference scripts invoking
-    ``wow.get_assoc_addrs_from_bbl(...)`` run unmodified. Returns
-    created table names."""
-    from nycdb_k8s_loader_spark.publish.parse_created_tables import (
-        is_function_sql,
-        parse_created_tables,
-        split_statements,
-    )
-    from nycdb_k8s_loader_spark.publish.transpile import transpile_pg
-
-    created: list[str] = []
-    for script in scripts:
-        with open(script, encoding="utf-8") as fh:
-            raw = fh.read()
-        for stmt in split_statements(raw):
-            # classify BEFORE rewriting (matching engine.py's load
-            # loop): a CREATE FUNCTION body that itself calls a
-            # registered table function must pass through untouched —
-            # materializing it here would bake a temp-view reference
-            # (and an eager materialization) into the DDL replayed
-            # post-publish
-            if is_function_sql(stmt):
-                function_stmts.append(transpile_pg(stmt))
-                continue
-            if functions is not None:
-                stmt = functions.materialize_table_fn_calls(spark, stmt)
-            stmt = transpile_pg(stmt)
-            resolver.sql(stmt)
-            created += [
-                t for t in parse_created_tables(stmt) if t not in created
-            ]
-    return created
-
-
 def populate_landlords(spark: SparkSession, staging_db: str) -> None:
     """Landlord standardization (reference populate_landlords_table,
     wowutil.py:74-78 via portfoliograph.standardize): normalize raw
@@ -613,76 +572,25 @@ def _custom_pipeline(
 ) -> list[str]:
     """The skeleton all four reference custom pipelines share
     (wowutil.py:144-186, ocautil.py:70-98, signatureutil.py:73-101,
-    goodcauseutil.py:53-81): staging namespace → source-CSV ingest
-    (typed, per the DatasetDef) → transpiled pre-SQL → Python populate
-    hook → post-SQL → grant-snapshot publish of the declared table
-    list into the pipeline's own schema → function-DDL replay. The
-    staging namespace always drops (success or error), so scaffolding
-    tables never leak and a failed build leaves the published tables
-    untouched."""
-    import os as _os
-
+    goodcauseutil.py:53-81): :meth:`Engine.run_protocol` with
+    pre-SQL → Python populate hook → post-SQL as its steps, publishing
+    the declared table list into the pipeline's own schema. The
+    per-target Publisher carries no version pointer: a versioned
+    publish carries only the load's own tables into the new version
+    database, and ``good_cause_eviction`` shares the ``wow`` schema
+    with the wow build."""
     from nycdb_k8s_loader_spark.publish.protocol import Publisher
-    from nycdb_k8s_loader_spark.publish.resolver import SearchPathResolver
 
     engine.notifier.safe_notify(f"Rebuilding {label}...")
-    ds = engine.registry.get(name)
-    pub = Publisher(
-        spark, target_schema,
-        external_root=engine.publish_external_root,
+    published = engine.run_protocol(
+        engine.registry.get(name),
+        Publisher(
+            spark, target_schema, external_root=engine.publish_external_root
+        ),
+        tables,
+        [*pre_scripts, *([populate] if populate else []), *post_scripts],
+        namespaces=extra_namespaces,
     )
-    function_stmts: list[str] = []
-    with pub.staging(name) as staging_db:
-        # source ingest — same contract as the standard load's step 0-1
-        # (the reference's builders pull S3 objects themselves,
-        # ocautil.py:56-61; here the engine's downloader/transport
-        # abstraction covers s3:// via sources.readers.fetch_to_landing)
-        dest_paths: dict[str, str] = {}
-        for f in ds.files:
-            dest = _os.path.join(engine.landing_root, ds.name, f.dest)
-            _os.makedirs(_os.path.dirname(dest), exist_ok=True)
-            engine.downloader(f.url, dest)
-            dest_paths[f.dest] = dest
-        from nycdb_k8s_loader_spark.sources.readers import read_source_table
-
-        formats = {f.dest: f.format for f in ds.files}
-        for t in ds.tables:
-            if t.schema is None or not dest_paths:
-                continue
-            df = read_source_table(spark, t, dest_paths, formats)
-            pub.write_staging_table(staging_db, t.name, df)
-
-        # ddl_db pins every CTAS/DROP target into THIS pipeline's
-        # staging db at rewrite time — no setCurrentDatabase, no lock:
-        # two custom pipelines in one dependency level overlap all of
-        # their Spark work (pre/post scripts AND populate), the round-3
-        # verdict's concurrency fix (#3: the old lock serialized
-        # populate()'s expensive jobs across same-level pipelines).
-        resolver = SearchPathResolver(
-            spark,
-            [staging_db, *extra_namespaces, *engine.search_path],
-            ddl_db=staging_db,
-            pointer=engine.version_pointer,
-        )
-        _run_scripts(
-            spark, resolver, pre_scripts, function_stmts,
-            functions=engine.functions,
-        )
-        if populate is not None:
-            populate(spark, staging_db)
-        _run_scripts(
-            spark, resolver, post_scripts, function_stmts,
-            functions=engine.functions,
-        )
-        with engine.grants.save_and_reapply(target_schema, tables):
-            published = pub.publish_tables(staging_db, tables)
-
-    # Function DDL replay after the swap (wowutil.py:170-181: the temp
-    # schema's functions died with it; re-create against the published
-    # namespace).
-    engine.functions.apply(spark)
-    for stmt in function_stmts:
-        spark.sql(stmt)
     engine.notifier.safe_notify(f"Finished rebuilding {label}.")
     return published
 

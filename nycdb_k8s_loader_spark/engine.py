@@ -4,12 +4,13 @@ Spark re-expression of /root/reference/load_dataset.py:308-381:
 
     check URLs (conditional GET) ── unchanged? → skip everything
         │ changed
-    download to landing dir
-        │
-    staging namespace:  read typed sources → tables
-                        run SQL transforms (search-path resolved)
-        │
-    atomic publish staging → target namespace
+    Engine.run_protocol — the one protocol for standard loads, custom
+    builders and streaming loads:
+        staging namespace:  download to landing dir, read typed sources
+                            run SQL scripts / populate hooks
+                            validate declared TableChecks
+        atomic publish staging → target namespace (grants reapplied)
+        replay function DDL
         │
     update lastmod validators + dataset tracker   (only after publish)
 
@@ -22,10 +23,13 @@ dispatch to registered builders (load_dataset.py:319-338).
 
 from __future__ import annotations
 
+import functools
 import logging
+import os
 import threading
-from collections.abc import Callable
+from collections.abc import Callable, Iterator, Sequence
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import AbstractContextManager, contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
@@ -41,8 +45,9 @@ from nycdb_k8s_loader_spark.publish.parse_created_tables import (
 )
 from nycdb_k8s_loader_spark.publish.protocol import Publisher
 from nycdb_k8s_loader_spark.publish.resolver import SearchPathResolver
+from nycdb_k8s_loader_spark.publish.transpile import transpile_pg
 from nycdb_k8s_loader_spark.registry import DatasetDef, Registry
-from nycdb_k8s_loader_spark.sources.readers import read_source_table
+from nycdb_k8s_loader_spark.sources.readers import landing_path, read_source_table
 from nycdb_k8s_loader_spark.state.lastmod import Transport, UrlModTracker, requests_transport
 from nycdb_k8s_loader_spark.state.tracker import DatasetTracker
 
@@ -182,10 +187,11 @@ class Engine:
             return LoadResult(dataset=name, skipped=True)
 
         if ds.builder is not None:
-            # Custom-dataset dispatch (load_dataset.py:319-338).
+            # Custom-dataset dispatch (load_dataset.py:319-338); every
+            # builder runs its pipeline through run_protocol too.
             published = ds.builder(self.spark, self)
         else:
-            published = self._standard_load(ds)
+            published = self.run_protocol(ds, self.publisher, None, ds.sql)
 
         with self._state_lock:
             modtracker.update_lastmods()
@@ -193,40 +199,50 @@ class Engine:
         self.notifier.safe_notify(f"Finished loading {name}.")
         return LoadResult(dataset=name, skipped=False, published=published)
 
-    def _standard_load(self, ds: DatasetDef) -> list[str]:
-        import os
+    def run_protocol(
+        self,
+        ds: DatasetDef,
+        publisher: Publisher,
+        tables: list[str] | None,
+        steps: Sequence[str | Callable[[SparkSession, str], None]],
+        namespaces: Sequence[str] = (),
+        ingest: Callable[[str], AbstractContextManager] | None = None,
+    ) -> list[str]:
+        """The one load protocol every dataset runs (reference:
+        load_dataset.py:209-252, 352-376; the custom builders share it,
+        wowutil.py:144-186):
 
-        # 0. refresh the landing copy of EVERY source file. The
-        # conditional-GET gate already decided the dataset changed, so
-        # an existing landing file may be stale — re-downloading only
-        # missing files would publish old bytes and then persist the
-        # new validators, silently losing the update forever.
-        dest_paths: dict[str, str] = {}
-        for f in ds.files:
-            dest = os.path.join(self.landing_root, ds.name, f.dest)
-            os.makedirs(os.path.dirname(dest), exist_ok=True)
-            self.downloader(f.url, dest)
-            dest_paths[f.dest] = dest
+        1. open a staging namespace on ``publisher``;
+        2. ``ingest(staging_db)`` stages the typed source tables — by
+           default :meth:`_ingest_sources` (download to landing, typed
+           read). The hook is a context manager that wraps steps 3-5,
+           so a caller can react to their failure or success
+           (``load_streaming`` quarantines or commits its increments);
+        3. run ``steps`` in order: a path is a Postgres-dialect SQL
+           script, transpiled and run statement by statement with
+           staging-first name resolution; a callable is a Python
+           populate hook ``step(spark, staging_db)``;
+        4. validate every declared ``TableChecks`` on its staging copy;
+        5. publish ``tables`` (None: the typed tables plus every table
+           the scripts CREATE) with grants snapshotted across the swap;
+        6. replay the scripts' function DDL.
 
+        A failure before step 5 raises with the staging namespace
+        dropped and the published tables untouched.
+        """
+        # looked up per call, so a wrapper installed on the module
+        # attribute (tracing) is honored
+        from nycdb_k8s_loader_spark.publish.validate import validate_or_raise
+
+        if ingest is None:
+            ingest = functools.partial(self._ingest_sources, ds, publisher)
+        created = (
+            [t.name for t in ds.tables if t.schema is not None]
+            if tables is None
+            else list(tables)
+        )
         function_stmts: list[str] = []
-        formats = {f.dest: f.format for f in ds.files}
-        with self.publisher.staging(ds.name) as staging_db:
-            # 1. ingest typed source tables (each table reads only the
-            # files mapped to it; None = the whole dataset), format-
-            # dispatched per source file (CSV scan / Excel workbook)
-            for table in ds.tables:
-                if table.schema is None:
-                    continue  # derived table, produced by SQL below
-                df = read_source_table(
-                    self.spark, table, dest_paths, formats,
-                    csv_options=ds.csv_options,
-                )
-                self.publisher.write_staging_table(staging_db, table.name, df)
-
-            # 2. SQL transformation scripts, staging-first resolution.
-            # Function DDL is collected per-STATEMENT (a mixed script's
-            # CREATE TABLEs still run) and re-registered post-publish,
-            # the reference's pattern (load_dataset.py:372-376).
+        with publisher.staging(ds.name) as staging_db, ingest(staging_db):
             # ddl_db qualifies CTAS/DROP/RENAME targets into THIS
             # load's staging namespace — no session-global
             # setCurrentDatabase, so concurrent loads (parallel
@@ -234,63 +250,58 @@ class Engine:
             # overlapped instead of serializing on a lock.
             resolver = SearchPathResolver(
                 self.spark,
-                [staging_db, *self.search_path],
+                [staging_db, *namespaces, *self.search_path],
                 ddl_db=staging_db,
                 pointer=self.version_pointer,
             )
-            created: list[str] = [
-                t.name for t in ds.tables if t.schema is not None
-            ]
-            for script in ds.sql:
-                with open(script, encoding="utf-8") as fh:
+            for step in steps:
+                if callable(step):
+                    step(self.spark, staging_db)
+                    continue
+                with open(step, encoding="utf-8") as fh:
                     sql_text = fh.read()
                 for stmt in split_statements(sql_text):
+                    # classify BEFORE rewriting: a CREATE FUNCTION
+                    # body that calls a registered table function is
+                    # replayed post-publish verbatim, never with a
+                    # session-temporary view name baked in
                     if is_function_sql(stmt):
-                        function_stmts.append(stmt)
-                    else:
-                        # table-function calls in FROM position become
-                        # materialized temp views (the reference's
-                        # SQL-invocable set-returning functions)
-                        stmt = self.functions.materialize_table_fn_calls(
-                            self.spark, stmt
-                        )
-                        resolver.sql(stmt)
-                for t in parse_created_tables(sql_text):
-                    if t not in created:
-                        created.append(t)
+                        function_stmts.append(transpile_pg(stmt))
+                        continue
+                    # table-function calls in FROM position become
+                    # materialized temp views (the reference's
+                    # SQL-invocable set-returning functions)
+                    stmt = self.functions.materialize_table_fn_calls(
+                        self.spark, stmt
+                    )
+                    resolver.sql(transpile_pg(stmt))
+                if tables is None:
+                    created += [
+                        t for t in parse_created_tables(sql_text)
+                        if t not in created
+                    ]
 
-            # 2.5 validation gate: staging copies must pass their
-            # declared checks or the load raises HERE — the staging
-            # ctx drops on the way out and readers keep the last good
-            # version (publish/validate.py; one aggregation pass per
-            # checked table).
-            from nycdb_k8s_loader_spark.publish.validate import (
-                validate_or_raise,
-            )
-
+            # validation gate: staging copies must pass their declared
+            # checks or the load raises HERE — the staging ctx drops on
+            # the way out and readers keep the last good version
+            # (publish/validate.py; one aggregation pass per table)
             for table in ds.tables:
                 if table.checks is not None:
                     validate_or_raise(
                         table.name,
-                        self.spark.table(
-                            f"`{staging_db}`.`{table.name}`"
-                        ),
+                        self.spark.table(f"`{staging_db}`.`{table.name}`"),
                         table.checks,
                     )
 
-            # 3. atomic publish, grants snapshotted across the swap
-            with self.grants.save_and_reapply(
-                self.publisher.target_db, created
-            ):
-                published = self.publisher.publish_tables(
-                    staging_db, created
-                )
+            with self.grants.save_and_reapply(publisher.target_db, created):
+                published = publisher.publish_tables(staging_db, created)
 
-        # 4. post-publish function re-registration (reference:
-        # load_dataset.py:372-376). Registry functions always re-apply;
-        # script-declared functions run if they are Spark-compatible
-        # DDL (CREATE TEMPORARY FUNCTION ... RETURN expr) — Postgres
-        # procedural bodies are logged and skipped.
+        # post-publish function re-registration (reference:
+        # load_dataset.py:372-376, wowutil.py:170-181). Registry
+        # functions always re-apply; script-declared functions run if
+        # they are Spark-compatible DDL (CREATE TEMPORARY FUNCTION ...
+        # RETURN expr) — Postgres procedural bodies are logged and
+        # skipped, the publish stands.
         self.functions.apply(self.spark)
         for stmt in function_stmts:
             try:
@@ -302,6 +313,34 @@ class Engine:
                 )
         return published
 
+    @contextmanager
+    def _ingest_sources(
+        self, ds: DatasetDef, publisher: Publisher, staging_db: str
+    ) -> Iterator[None]:
+        """Refresh the landing copy of EVERY source file, then stage
+        each typed table. The conditional-GET gate already decided the
+        dataset changed, so an existing landing file may be stale —
+        re-downloading only missing files would publish old bytes and
+        then persist the new validators, silently losing the update
+        forever. Each table reads only the files mapped to it (None =
+        the whole dataset), format-dispatched per source file."""
+        dest_paths: dict[str, str] = {}
+        for f in ds.files:
+            dest = landing_path(self.landing_root, ds.name, f.dest)
+            os.makedirs(os.path.dirname(dest), exist_ok=True)
+            self.downloader(f.url, dest)
+            dest_paths[f.dest] = dest
+        formats = {f.dest: f.format for f in ds.files}
+        for table in ds.tables:
+            if table.schema is None:
+                continue  # derived table, produced by the steps
+            df = read_source_table(
+                self.spark, table, dest_paths, formats,
+                csv_options=ds.csv_options,
+            )
+            publisher.write_staging_table(staging_db, table.name, df)
+        yield
+
     def load_streaming(
         self, name: str, max_files_per_trigger: int | None = None
     ) -> LoadResult:
@@ -309,28 +348,31 @@ class Engine:
         reference's cron unit of work as a CHECKPOINTED incremental
         stream (SURVEY §2.9's declared stretch). Source files are
         DROPPED into ``<landing_root>/<name>/stream/<table>/`` (by an
-        upstream fetcher, a cloud transfer job, or tests); each call:
+        upstream fetcher, a cloud transfer job, or tests); each call
+        runs :meth:`run_protocol` with :meth:`_ingest_stream` as its
+        ingest step:
 
-        1. runs one ``availableNow`` pass per typed table —
+        1. one ``availableNow`` pass per typed table —
            ``incremental_csv_source`` (readStream + registry schema)
            staging each micro-batch as a plain parquet dir under
            ``_stream/<table>/pending/`` (``run_available_now_staged``),
            with the file-source checkpoint remembering which files
            earlier calls consumed, so a rerun processes only NEW drops;
-        2. validates the (durable store ∪ pending increment) union
-           through TableChecks, and only on success MOVES the pending
-           files into the durable store — the store therefore always
-           holds last-known-good data. A failing increment is moved to
+           the staged table is the (durable store ∪ pending increment)
+           union;
+        2. the dataset's SQL, TableChecks validation and atomic publish
+           run exactly as in a batch load. A failing check MOVES the
+           indicted increment (the failing table's, or every table's
+           when a derived table fails) to
            ``_stream/<table>/quarantine/<n>/`` and the load aborts with
            the quarantine path in the error: the next call republishes
            the clean store, and the operator can inspect/fix/re-drop
            the quarantined files. (Without this gate a corrupt drop
            would be committed to the store AND marked consumed in the
            checkpoint, wedging every subsequent call.)
-        3. republishes the ACCUMULATED store through the identical
-           staging → validation → atomic publish protocol as a batch
-           load — readers always see the full table, and a corrupt
-           increment aborts BEFORE any published table moves.
+        3. only after the publish succeeds are the pending files MOVED
+           into the durable store — the store therefore always holds
+           last-known-good data.
 
         Incremental in compute (per-call cost ∝ new files), full-table
         in publish semantics — the same contract the reference's
@@ -354,12 +396,26 @@ class Engine:
         table mixing CSV and binary formats has no single stream shape
         and fails loudly.
         """
-        import os
-
-        from nycdb_k8s_loader_spark.publish.validate import (
-            ValidationError,
-            validate_or_raise,
+        ds = self.registry.get(name)
+        published = self.run_protocol(
+            ds, self.publisher, None, ds.sql,
+            ingest=functools.partial(
+                self._ingest_stream, ds, max_files_per_trigger
+            ),
         )
+        return LoadResult(dataset=name, skipped=False, published=published)
+
+    @contextmanager
+    def _ingest_stream(
+        self,
+        ds: DatasetDef,
+        max_files_per_trigger: int | None,
+        staging_db: str,
+    ) -> Iterator[None]:
+        """load_streaming's ingest step: stage each typed table from its
+        stream store plus the pending increment; quarantine on a failed
+        check, commit the increments after the publish."""
+        from nycdb_k8s_loader_spark.publish.validate import ValidationError
         from nycdb_k8s_loader_spark.streaming.pipeline import (
             incremental_binary_source,
             incremental_csv_source,
@@ -367,9 +423,7 @@ class Engine:
             run_available_now_staged_binary_distributed,
         )
 
-        ds = self.registry.get(name)
         formats = {f.dest: f.format for f in ds.files}
-        typed = [t for t in ds.tables if t.schema is not None]
 
         def _table_format(table) -> str:
             dests = (
@@ -378,165 +432,93 @@ class Engine:
             fmts = {formats.get(d, "csv") for d in dests} or {"csv"}
             if len(fmts) > 1:
                 raise ValueError(
-                    f"load_streaming({name!r}): table {table.name!r} "
+                    f"load_streaming({ds.name!r}): table {table.name!r} "
                     f"mixes source formats {sorted(fmts)} — no single "
                     "stream shape; split the table or use the batch "
                     "load"
                 )
             return next(iter(fmts))
-        pending_commits: list[tuple[str, str, list[str]]] = []
-        with self.publisher.staging(ds.name) as staging_db:
-            for table in typed:
-                stream_root = os.path.join(
-                    self.landing_root, ds.name, "_stream", table.name
-                )
-                land = os.path.join(
-                    self.landing_root, ds.name, "stream", table.name
-                )
-                store = os.path.join(stream_root, "data")
-                pending = os.path.join(stream_root, "pending")
-                ckpt = os.path.join(stream_root, "ckpt")
-                os.makedirs(land, exist_ok=True)
-                os.makedirs(store, exist_ok=True)
-                fmt = _table_format(table)
-                if fmt == "csv":
-                    src = incremental_csv_source(
-                        self.spark, land, table.schema,
-                        max_files_per_trigger=max_files_per_trigger,
-                    )
-                    run_available_now_staged(src, pending, ckpt)
-                else:
-                    src = incremental_binary_source(
-                        self.spark, land,
-                        max_files_per_trigger=max_files_per_trigger,
-                    )
-                    # parse on the EXECUTORS (mapInPandas) — the
-                    # driver never materializes file bytes, so an
-                    # unbounded drop backlog can't OOM it
-                    run_available_now_staged_binary_distributed(
-                        src, pending, ckpt,
-                        self._binary_row_parser(fmt, table.schema),
-                        table.schema,
-                    )
-                # pending = this call's increment plus any batches a
-                # crashed/aborted earlier call staged but never
-                # committed — both re-enter validation here
-                batch_dirs = (
-                    sorted(
-                        os.path.join(pending, d)
-                        for d in os.listdir(pending)
-                        if d.startswith("batch-")
-                    )
-                    if os.path.isdir(pending)
-                    else []
-                )
-                accumulated = self.spark.read.schema(table.schema).parquet(
-                    store, *batch_dirs
-                )
-                self.publisher.write_staging_table(
-                    staging_db, table.name, accumulated
-                )
-                if table.checks is not None:
-                    try:
-                        validate_or_raise(
-                            table.name,
-                            self.spark.table(
-                                f"`{staging_db}`.`{table.name}`"
-                            ),
-                            table.checks,
-                        )
-                    except ValidationError as err:
-                        qdir = self._quarantine_pending(
-                            stream_root, batch_dirs
-                        )
-                        err.args = (
-                            f"{err.args[0]} — increment quarantined to "
-                            f"{qdir}; the durable store keeps the last "
-                            "validated data and the next load_streaming "
-                            "call republishes it (inspect/fix/re-drop "
-                            "the quarantined files to recover the "
-                            "increment)",
-                        )
-                        raise
-                # validated — but commit only after the WHOLE load
-                # (derived-table checks + publish) succeeds, so a
-                # failure anywhere leaves the store untouched
-                pending_commits.append((stream_root, store, batch_dirs))
-            # dataset-attached SQL runs against the refreshed staging
-            # copies exactly as in the batch load (step 2 of
-            # _standard_load) — without this, a streaming-loaded
-            # dataset would silently drop its derived tables (e.g.
-            # hpd_registrations_grouped_by_bbl)
-            created = [t.name for t in typed]
-            function_stmts: list[str] = []
-            resolver = SearchPathResolver(
-                self.spark,
-                [staging_db, *self.search_path],
-                ddl_db=staging_db,
-                pointer=self.version_pointer,
+
+        # (table, stream root, durable store, pending batch dirs)
+        pending_commits: list[tuple[str, str, str, list[str]]] = []
+        for table in ds.tables:
+            if table.schema is None:
+                continue
+            stream_root = os.path.join(
+                self.landing_root, ds.name, "_stream", table.name
             )
-            for script in ds.sql:
-                with open(script, encoding="utf-8") as fh:
-                    sql_text = fh.read()
-                for stmt in split_statements(sql_text):
-                    if is_function_sql(stmt):
-                        function_stmts.append(stmt)
-                    else:
-                        stmt = self.functions.materialize_table_fn_calls(
-                            self.spark, stmt
-                        )
-                        resolver.sql(stmt)
-                for t in parse_created_tables(sql_text):
-                    if t not in created:
-                        created.append(t)
-            for table in ds.tables:
-                if table.schema is None and table.checks is not None:
-                    try:
-                        validate_or_raise(
-                            table.name,
-                            self.spark.table(
-                                f"`{staging_db}`.`{table.name}`"
-                            ),
-                            table.checks,
-                        )
-                    except ValidationError as err:
-                        # a derived-table check indicts the whole
-                        # increment set — quarantine every table's
-                        # pending batches so the stores stay clean
-                        qdirs = [
-                            self._quarantine_pending(root, dirs)
-                            for root, _store, dirs in pending_commits
-                            if dirs
-                        ]
-                        err.args = (
-                            f"{err.args[0]} — increments quarantined "
-                            f"to {qdirs}; the durable stores keep the "
-                            "last validated data",
-                        )
-                        raise
-            with self.grants.save_and_reapply(
-                self.publisher.target_db, created
-            ):
-                published = self.publisher.publish_tables(
-                    staging_db, created
+            land = os.path.join(self.landing_root, ds.name, "stream", table.name)
+            store = os.path.join(stream_root, "data")
+            pending = os.path.join(stream_root, "pending")
+            ckpt = os.path.join(stream_root, "ckpt")
+            os.makedirs(land, exist_ok=True)
+            os.makedirs(store, exist_ok=True)
+            fmt = _table_format(table)
+            if fmt == "csv":
+                src = incremental_csv_source(
+                    self.spark, land, table.schema,
+                    max_files_per_trigger=max_files_per_trigger,
                 )
-            # everything validated and the publish succeeded — commit
-            # the increments into the durable stores. A crash between
-            # publish and here just leaves the batches pending; the
-            # next call re-validates and re-publishes the same data
-            # (idempotent), then commits.
-            for stream_root, store, batch_dirs in pending_commits:
-                self._commit_pending(store, batch_dirs)
-        self.functions.apply(self.spark)
-        for stmt in function_stmts:
-            try:
-                self.spark.sql(stmt)
-            except Exception:  # noqa: BLE001 - dialect gap, not fatal
-                log.warning(
-                    "function DDL is not Spark-compatible; register it "
-                    "in the FunctionRegistry instead:\n%s", stmt[:200]
+                run_available_now_staged(src, pending, ckpt)
+            else:
+                src = incremental_binary_source(
+                    self.spark, land,
+                    max_files_per_trigger=max_files_per_trigger,
                 )
-        return LoadResult(dataset=name, skipped=False, published=published)
+                # parse on the EXECUTORS (mapInPandas) — the driver
+                # never materializes file bytes, so an unbounded drop
+                # backlog can't OOM it
+                run_available_now_staged_binary_distributed(
+                    src, pending, ckpt,
+                    self._binary_row_parser(fmt, table.schema),
+                    table.schema,
+                )
+            # pending = this call's increment plus any batches a
+            # crashed/aborted earlier call staged but never committed —
+            # both re-enter validation here
+            batch_dirs = (
+                sorted(
+                    os.path.join(pending, d)
+                    for d in os.listdir(pending)
+                    if d.startswith("batch-")
+                )
+                if os.path.isdir(pending)
+                else []
+            )
+            accumulated = self.spark.read.schema(table.schema).parquet(
+                store, *batch_dirs
+            )
+            self.publisher.write_staging_table(
+                staging_db, table.name, accumulated
+            )
+            pending_commits.append((table.name, stream_root, store, batch_dirs))
+        try:
+            yield
+        except ValidationError as err:
+            # a typed table's check indicts its own increment; a
+            # derived table's check indicts the whole increment set
+            blamed = [
+                p for p in pending_commits if p[0] == err.table
+            ] or pending_commits
+            qdirs = [
+                self._quarantine_pending(root, dirs)
+                for _table, root, _store, dirs in blamed
+                if dirs
+            ]
+            err.args = (
+                f"{err.args[0]} — increment quarantined to {qdirs}; the "
+                "durable store keeps the last validated data and the "
+                "next load_streaming call republishes it (inspect/fix/"
+                "re-drop the quarantined files to recover the increment)",
+            )
+            raise
+        # everything validated and the publish succeeded — commit the
+        # increments into the durable stores. A crash between publish
+        # and here just leaves the batches pending; the next call
+        # re-validates and re-publishes the same data (idempotent),
+        # then commits.
+        for _table, _root, store, batch_dirs in pending_commits:
+            self._commit_pending(store, batch_dirs)
 
     @staticmethod
     def _binary_row_parser(fmt: str, schema):
@@ -580,7 +562,6 @@ class Engine:
         and attributable; the emptied batch dir is removed. Plain
         parquet dirs on both sides — no ``_spark_metadata`` log to
         invalidate (see run_available_now_staged)."""
-        import os
         import shutil
 
         for bdir in batch_dirs:
@@ -601,7 +582,6 @@ class Engine:
         that path. The checkpoint has already consumed the source
         files, so quarantining (rather than deleting) preserves the
         only remaining copy of the increment for inspection/re-drop."""
-        import os
         import shutil
 
         qroot = os.path.join(stream_root, "quarantine")

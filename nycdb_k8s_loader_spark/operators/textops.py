@@ -700,6 +700,15 @@ def pii_scrub(df: DataFrame, text_col: str = "text",
     )
 
 
+#: Columns gopher_quality_rules emits (after the id) or stages
+#: internally; a passthrough column may not reuse any of them.
+_GOPHER_COLUMNS = (
+    "n_words", "mean_word_len", "alpha_word_frac", "stopword_hits",
+    "ok_word_count", "ok_mean_word_len", "ok_alpha_frac", "ok_stopwords",
+    "keep", "__ws", "__nonspace",
+)
+
+
 def gopher_quality_rules(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -729,8 +738,16 @@ def gopher_quality_rules(
     ``passthrough`` names input columns to carry verbatim onto the
     output (r14): fused consumers (the c07/c08 verdict spine) ride the
     SAME corpus pass for the verdict AND the survivor payload instead
-    of re-scanning the corpus to fetch it.
+    of re-scanning the corpus to fetch it. A passthrough name equal to
+    ``id_col``, an output statistic or an internal ``__`` column raises
+    ``ValueError`` instead of emitting an ambiguous duplicate column.
     """
+    clash = sorted(set(passthrough) & {id_col, *_GOPHER_COLUMNS})
+    if clash:
+        raise ValueError(
+            f"gopher_quality_rules: passthrough columns {clash} collide "
+            "with the operator's own columns; rename them first"
+        )
     text = F.col(text_col)
     staged = df.select(
         F.col(id_col),

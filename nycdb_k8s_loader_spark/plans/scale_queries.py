@@ -1178,29 +1178,40 @@ def geo13(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     _, lots = _district_lot_fixture(spark, sf_dir)
-    r = ((F.col("c_custkey") % 4) + 1) * 0.125
+
+    def radius(c):
+        return (c + 1) * 0.125
+
     xs = F.transform(F.col("__buf"), lambda p: p["x"])
     ys = F.transform(F.col("__buf"), lambda p: p["y"])
-    # dedup by (wkt, r) class (r14, guide §8): the buffer ring — and
-    # every output except the id — is a pure function of (lot_wkt, r),
-    # and the fixture tiles 15k lots over 100 distinct classes; the
-    # parse + offset-intersect fold runs once per class and the
-    # per-row values re-attach by the class key (row-identical).
-    keyed = lots.select("c_custkey", "lot_wkt", r.alias("r"))
+    # dedup by (wkt, radius class) (r14, guide §8): the buffer ring —
+    # and every output except the id — is a pure function of lot_wkt
+    # and the integer class c_custkey % 4, and the fixture tiles 15k
+    # lots over 100 distinct classes; the parse + offset-intersect
+    # fold runs once per class and the per-row values re-attach by the
+    # class key (row-identical). The join key is the integer class,
+    # never the double radius; r is derived from it on both sides.
+    keyed = lots.select(
+        "c_custkey", "lot_wkt", (F.col("c_custkey") % 4).alias("__c")
+    )
     per_class = with_miter_buffer(
-        keyed.select("lot_wkt", "r").distinct(),
+        keyed.select("lot_wkt", "__c").distinct(),
         "lot_wkt",
-        F.col("r"),
+        radius(F.col("__c")),
         out_col="__buf",
     ).select(
         "lot_wkt",
-        "r",
+        "__c",
         F.round(ring_area(F.col("__buf")), 6).alias("buf_area"),
         F.round(F.array_min(xs), 6).alias("min_x"),
         F.round(F.array_min(ys), 6).alias("min_y"),
     )
-    return keyed.join(per_class, ["lot_wkt", "r"]).select(
-        "c_custkey", "r", "buf_area", "min_x", "min_y"
+    return keyed.join(per_class, ["lot_wkt", "__c"]).select(
+        "c_custkey",
+        radius(F.col("__c")).alias("r"),
+        "buf_area",
+        "min_x",
+        "min_y",
     )
 
 

@@ -55,11 +55,6 @@ import re
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import TYPE_CHECKING
-
-if TYPE_CHECKING:  # import cycle: validate imports nothing from here,
-    # but keep the runtime import lazy inside load_and_publish anyway
-    from nycdb_k8s_loader_spark.publish.validate import TableChecks
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -500,32 +495,3 @@ class Publisher:
                 self.drop_db(db)
         dropped = {db for db in excess if db != live}
         return [db for db in versions if db not in dropped]
-
-    # -- whole-protocol convenience ---------------------------------------------
-
-    def load_and_publish(
-        self,
-        dataset: str,
-        builders: dict[str, "callable"],
-        checks: dict[str, "TableChecks"] | None = None,
-    ) -> list[str]:
-        """Run each ``{table: fn() -> DataFrame}`` into staging,
-        validate the STAGING copies (``checks``: per-table
-        publish/validate.TableChecks), then publish all-or-nothing.
-        A failed check raises before any table swaps — readers keep
-        the last good version (errors roll back by dropping staging).
-        """
-        from nycdb_k8s_loader_spark.publish.validate import (
-            validate_or_raise,
-        )
-
-        with self.staging(dataset) as db:
-            names = []
-            for table, build in builders.items():
-                self.write_staging_table(db, table, build())
-                names.append(table)
-            for table, tc in (checks or {}).items():
-                validate_or_raise(
-                    table, self.spark.table(f"`{db}`.`{table}`"), tc
-                )
-            return self.publish_tables(db, names)

@@ -2509,6 +2509,26 @@ class TestCurationPack:
         # 2 alpha words of 60 -> 0.0333
         assert r[4]["alpha_word_frac"] == 0.0333
 
+    @pytest.mark.parametrize(
+        "name", ["doc_id", "n_words", "keep", "ok_stopwords", "__ws",
+                 "__nonspace"],
+    )
+    def test_gopher_rules_passthrough_collision_raises(self, spark, name):
+        """A passthrough column named like the id, an output statistic
+        or an internal staging column would come out as an ambiguous
+        duplicate; the operator refuses it up front."""
+        from nycdb_k8s_loader_spark.operators.textops import (
+            gopher_quality_rules,
+        )
+
+        docs = spark.createDataFrame(
+            [(1, "the a word")], "doc_id long, text string"
+        )
+        if name != "doc_id":
+            docs = docs.withColumn(name, F.lit(7))
+        with pytest.raises(ValueError, match="collide"):
+            gopher_quality_rules(docs, passthrough=("text", name))
+
     def test_gopher_rules_empty_and_whitespace_docs(self, spark):
         """A quality filter must survive junk docs: empty / blank text
         has n_words == 0, and under Spark 4's default ANSI mode a bare

@@ -528,38 +528,49 @@ class TestValidationGate:
         r = check_foreign_key(child, ["ref"], parent, ["pk"])
         assert r.violations == 1  # only ref=99; NULL ref passes
 
-    def test_publish_gated_on_validation(self, spark):
+    def test_publish_gated_on_validation(self, spark, tmp_path):
         """A failing staging check must abort the swap: the previously
         published table stays visible, staging is rolled back."""
-        from nycdb_k8s_loader_spark.publish.protocol import Publisher
         from nycdb_k8s_loader_spark.publish.validate import (
             TableChecks,
             ValidationError,
         )
 
-        pub = Publisher(spark, target_db="vgate_public")
-        good = lambda: spark.createDataFrame([(1, "x"), (2, "y")], ["k", "v"])
-        pub.load_and_publish(
-            "vgate_ds",
-            {"tbl": good},
-            checks={"tbl": TableChecks(unique_key=["k"], min_rows=1)},
-        )
-        assert spark.table("vgate_public.tbl").count() == 2
+        reg = Registry()
+        reg.add(DatasetDef(
+            name="vgate_ds",
+            files=[SourceFile(url="https://x/tbl.csv", dest="tbl.csv")],
+            tables=[TableDef(
+                "tbl",
+                T.StructType([
+                    T.StructField("k", T.IntegerType()),
+                    T.StructField("v", T.StringType()),
+                ]),
+                checks=TableChecks(unique_key=["k"], min_rows=1),
+            )],
+        ))
+        csv = ["k,v\n1,x\n2,y\n"]
 
-        bad = lambda: spark.createDataFrame([(1, "x"), (1, "y")], ["k", "v"])
+        def downloader(url, dest):
+            with open(dest, "w") as fh:
+                fh.write(csv[0])
+
+        eng = make_engine(
+            spark, reg, str(tmp_path / "landing"), db="vgate_public",
+            downloader=downloader,
+        )
         try:
-            pub.load_and_publish(
-                "vgate_ds",
-                {"tbl": bad},
-                checks={"tbl": TableChecks(unique_key=["k"])},
-            )
-            assert False, "should raise"
-        except ValidationError:
-            pass
-        # last good version still published; staging cleaned up
-        assert spark.table("vgate_public.tbl").count() == 2
-        assert pub.list_staging_dbs("vgate_ds") == []
-        spark.sql("DROP DATABASE IF EXISTS vgate_public CASCADE")
+            eng.load("vgate_ds")
+            assert spark.table("vgate_public.tbl").count() == 2
+
+            csv[0] = "k,v\n1,x\n1,y\n"
+            with pytest.raises(ValidationError):
+                eng.load("vgate_ds")
+            # last good version still published; staging cleaned up
+            assert spark.table("vgate_public.tbl").count() == 2
+            assert eng.publisher.list_staging_dbs("vgate_ds") == []
+        finally:
+            spark.sql("DROP DATABASE IF EXISTS vgate_public CASCADE")
 
     def test_empty_table_checks_do_not_crash(self, spark):
         """Zero-row staging table: sums over no rows must surface as 0
