@@ -9,7 +9,7 @@ Spark re-expression of /root/reference/load_dataset.py:308-381:
         staging namespace:  download to landing dir, read typed sources
                             run SQL scripts / populate hooks
                             validate declared TableChecks
-        atomic publish staging → target namespace (grants reapplied)
+        publish staging → target namespace (grants reapplied)
         replay function DDL
         │
     update lastmod validators + dataset tracker   (only after publish)
@@ -96,11 +96,11 @@ class Engine:
         self.spark = spark
         self.registry = registry
         self.kv = kv
-        # publish_external_root opts into the metadata-only publish
-        # (versioned path + external-table pointer flip — zero data
-        # copy; see publish/protocol.py module docstring). The 100 TB
-        # default; copy mode remains for warehouses where the catalog
-        # must own the files.
+        # publish_external_root opts into the external publish
+        # (versioned path + external-table pointer flip; see the
+        # publish/protocol.py module docstring). Without it, tables
+        # stay catalog-managed and publish moves each staged table's
+        # directory — either way the data is written once.
         self.publish_external_root = publish_external_root
         # versioned_publish opts into CROSS-TABLE-atomic publish: all
         # of a load's tables land in one fresh version database and

@@ -165,23 +165,6 @@ def radius_self_join(
     )
 
 
-def grid_density(
-    points: DataFrame, lat: str, lng: str, edge_deg: float
-) -> DataFrame:
-    """Points-per-cell density with cell centroids — the aggregation
-    twin of the bin join (one shuffle on the cell key; partial counts
-    map-side)."""
-    return (
-        with_grid_cell(points, lat, lng, edge_deg)
-        .groupBy("cell_x", "cell_y")
-        .agg(
-            F.count("*").alias("n_points"),
-            F.avg(lat).alias("centroid_lat"),
-            F.avg(lng).alias("centroid_lng"),
-        )
-    )
-
-
 # --- WKT polygons: parse + point-in-polygon, pure expressions ----------------
 
 

@@ -1,49 +1,47 @@
-"""Shadow-write + atomic-publish protocol.
+"""Shadow-write + publish protocol.
 
 Capability twin of the reference's temporary-schema dance
 (/root/reference/load_dataset.py:209-252, 365-370): load into
 ``staging_<dataset>_<epoch>``, and only after everything succeeds move
 the results into the target namespace; on any error the staging
-namespace is dropped and readers never saw a thing.
+namespace is dropped and readers never saw a thing. Every table's data
+is written ONCE, into staging (SURVEY.md §2 K3/O1); Spark's catalog
+cannot move a table across databases (no ``ALTER TABLE ... SET
+SCHEMA``), so publish is one of:
 
-Spark mapping (SURVEY.md §2 K3/O1): Spark's catalog cannot move a
-table across databases (`ALTER TABLE ... SET SCHEMA` has no
-equivalent), so publish is one of two modes:
+- **move** (managed tables, the default; :meth:`Publisher._move_managed`):
+  rename the staged directory to a hidden ``<target db>/.<t>.incoming``,
+  drop the target, ``CREATE TABLE ... LIKE`` the staged table (schema,
+  provider, partitioning, bucketing), rename the directory into place.
+  No Spark job runs. Readers miss the table only between the DROP and
+  the last rename — a few catalog and file-system calls, never a data
+  write. A crash there leaves the table missing or empty, validators
+  unpersisted: the retry republishes and clears the stale
+  ``.incoming``. Hadoop ``FileSystem`` renames are atomic on
+  local/HDFS/NFS warehouses, a copy on object stores (still no job).
+- **external mode** (``external_root=...``): source data lands in a
+  versioned location ``<root>/<target_db>/<table>/v_<epoch>``, the
+  staging table is an external pointer at it, and publish re-points an
+  external table in the target database at the same files — two
+  catalog statements, the same brief drop/re-create gap as the
+  reference's SET SCHEMA (load_dataset.py:244-252). Old versions are
+  pruned only AFTER the flip (a crash strands extra files, never live
+  data). Derived CTAS tables in the staging db are managed and move.
 
-- **copy mode** (default): per-table ``saveAsTable`` overwrite from
-  staging into the target. Each table swap is atomic (new data files
-  written first, catalog pointer flipped last) but the data is
-  WRITTEN TWICE — fine for small/derived tables, wrong as the only
-  option at 100 TB.
-- **external mode** (``external_root=...``): source data is written
-  ONCE to a versioned location
-  ``<root>/<target_db>/<table>/v_<epoch>``, the staging table is an
-  external pointer at it, and publish re-points an external table in
-  the target database at the same files — two catalog statements,
-  ZERO data movement. This is the true Spark analog of the
-  reference's metadata-only ``ALTER TABLE ... SET SCHEMA``
-  (load_dataset.py:244-252): both have the same brief reader gap
-  between drop and re-create, and both leave the previous version's
-  files on disk until pruned (prune runs only AFTER the flip, so a
-  crash strands extra files, never live-table data). Derived CTAS
-  tables created inside the staging db are managed and publish via
-  copy mode automatically — mixed datasets just work.
-
-Cross-*table* atomicity in these two modes is weaker than the
-reference's single-schema swap (a reader between per-table flips can
-see table A new + table B old). **Versioned mode** restores the
-reference's all-tables-one-commit semantics
-(/root/reference/load_dataset.py:244-252 — every ALTER TABLE SET
+Cross-*table* atomicity in these modes is weaker than the reference's
+single-schema swap (a reader between per-table publishes can see
+table A new + table B old). **Versioned mode** restores the
+reference's all-tables-one-commit semantics (every ALTER TABLE SET
 SCHEMA shares ONE ``conn.commit()``): construct the Publisher with a
-:class:`VersionPointer` and every publish writes ALL tables into a
-fresh ``<target>__v_<epoch>_<seq>`` database, then flips ONE pointer
-(an atomic KV write — ParquetKVStore's temp-file + ``os.replace``).
+:class:`VersionPointer` and every publish lands ALL tables in a fresh
+``<target>__v_<epoch>_<seq>`` database, then flips ONE pointer (an
+atomic KV write — ParquetKVStore's temp-file + ``os.replace``).
 Readers resolve the logical database through the pointer
 (:meth:`VersionPointer.resolve`, honored by
-``SearchPathResolver(pointer=...)``), so mid-publish they keep the
-previous version in full and post-flip they see the new version in
-full — never a mix. Old version databases are pruned AFTER the flip,
-never the pointed-at one.
+``SearchPathResolver(pointer=...)``), so they see the previous version
+in full until the flip and the new one in full after it — never a mix,
+never a gap. Old version databases are pruned AFTER the flip, never
+the pointed-at one.
 
 Idempotency (reference O3, tests/test_load_dataset.py:78-84): rerunning
 a load is a deterministic overwrite — same inputs, same tables.
@@ -231,13 +229,12 @@ class Publisher:
         df: DataFrame,
         layout: TableLayout | None = None,
     ) -> None:
-        """Stage one source table. Copy mode: managed saveAsTable in
-        the staging db. External mode: ONE parquet write to the next
-        version dir + an external staging table pointing at it (the
-        same files the publish flip will re-point the target at —
-        the staging DROP DATABASE CASCADE removes only metadata).
-        Bucketed layouts force copy mode: Spark cannot attach a
-        bucketing spec to a path-first write."""
+        """Stage one source table — the only write its data gets: a
+        managed table with ``layout`` applied, which publish moves. In
+        external mode: a parquet write to the next version dir + an
+        external staging table pointing at it (the files the publish
+        flip re-points the target at). Bucketed layouts stay managed:
+        Spark cannot attach a bucketing spec to a path-first write."""
         self._reclaim_orphan_location(db, table)
         if self.external_root and not (layout and layout.bucket_by):
             path = self._version_path(table)
@@ -262,18 +259,15 @@ class Publisher:
         )
 
     def _create_external(self, db: str, table: str, path: str) -> None:
-        # partition discovery: a partitioned path needs MSCK-style
-        # repair; USING PARQUET LOCATION infers both schema and
-        # partitions at create time for the unpartitioned case, and
-        # partitioned dirs are handled by recoverPartitions below.
+        # USING PARQUET LOCATION infers schema and partition columns;
+        # a partitioned table still needs its partitions recovered
         self._sql(
             f"CREATE TABLE `{db}`.`{table}` USING PARQUET "
             f"LOCATION '{path}'"
         )
-        try:
-            self.spark.catalog.recoverPartitions(f"`{db}`.`{table}`")
-        except Exception:  # noqa: BLE001 - unpartitioned table
-            pass
+        loc = self.spark._jvm.org.apache.hadoop.fs.Path(path)
+        fs = loc.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        self._recover_partitions(f"`{db}`.`{table}`", fs, loc)
 
     def _table_location(self, db: str, table: str) -> str | None:
         if not self.spark.catalog.tableExists(f"`{db}`.`{table}`"):
@@ -296,12 +290,44 @@ class Publisher:
         return parsed.path if parsed.scheme else uri
 
     def _is_external(self, db: str, table: str) -> bool:
+        if not self.external_root:
+            return False
         loc = self._table_location(db, table)
-        return bool(
-            loc
-            and self.external_root
-            and self._fs_path(loc).startswith(self.external_root)
-        )
+        return bool(loc and self._fs_path(loc).startswith(self.external_root))
+
+    def _move_managed(self, src_db: str, table: str, dst_db: str) -> None:
+        """Publish a managed staged table by moving its directory (module
+        docstring). A Hadoop rename onto an existing directory nests
+        inside it and fails by returning False: clear, then check."""
+        hpath = self.spark._jvm.org.apache.hadoop.fs.Path
+        src_dir = hpath(self.spark.catalog.getDatabase(src_db).locationUri)
+        dst_dir = hpath(self.spark.catalog.getDatabase(dst_db).locationUri)
+        fs = dst_dir.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        src, dst = hpath(src_dir, table), hpath(dst_dir, table)
+        incoming = hpath(dst_dir, f".{table}.incoming")
+
+        def rename(a, b) -> None:
+            fs.delete(b, True)
+            if not fs.rename(a, b):
+                raise OSError(f"publish of {table}: rename {a} -> {b} failed")
+
+        rename(src, incoming)  # clears a crashed move's leftover
+        name = f"`{dst_db}`.`{table}`"
+        self._sql(f"DROP TABLE IF EXISTS {name}")
+        # also clears a directory the catalog forgot (an in-memory
+        # catalog across sessions): CREATE refuses a non-empty location
+        fs.delete(dst, True)
+        self._sql(f"CREATE TABLE {name} LIKE `{src_db}`.`{table}`")
+        rename(incoming, dst)  # replaces the empty dir CREATE made
+        # a reader between CREATE and the rename cached an empty listing
+        self.spark.catalog.refreshTable(name)
+        self._recover_partitions(name, fs, dst)
+
+    def _recover_partitions(self, name: str, fs, path) -> None:
+        """Only a partitioned table's directory holds subdirectories (the
+        catalog's answer costs Spark jobs via listColumns, or a raise)."""
+        if any(st.isDirectory() for st in fs.listStatus(path)):
+            self.spark.catalog.recoverPartitions(name)
 
     def _prune_versions(
         self, table: str, protect: set[str] | None = None
@@ -350,54 +376,34 @@ class Publisher:
         self,
         staging_db: str,
         tables: list[str],
-        layouts: dict[str, TableLayout] | None = None,
         on_table_published=None,
     ) -> list[str]:
-        """Move results staging → target: drop-and-replace per table
-        (reference: drop_tables_if_they_exist + change_table_schemas,
-        load_dataset.py:163-169, 244-252). ``layouts`` re-applies
-        per-table partitioning/bucketing on the published copy.
-        ``on_table_published(table)`` fires after each table lands
-        (progress hooks; the versioned-mode atomicity test interleaves
-        a reader here). With a :class:`VersionPointer` configured this
-        routes to the cross-table-atomic versioned publish."""
+        """Move results staging → target, per table (reference:
+        drop_tables_if_they_exist + change_table_schemas,
+        load_dataset.py:163-169, 244-252): external tables re-point,
+        managed ones move (:meth:`_move_managed`), each keeping the
+        layout it was staged with. ``on_table_published(table)`` fires
+        after each table lands (progress hooks; the versioned-mode
+        atomicity test interleaves a reader here). With a
+        :class:`VersionPointer` configured this routes to the
+        cross-table-atomic versioned publish."""
         if self.version_pointer is not None:
             return self._publish_tables_versioned(
-                staging_db, tables, layouts, on_table_published
+                staging_db, tables, on_table_published
             )
         self._sql(f"CREATE DATABASE IF NOT EXISTS `{self.target_db}`")
-        published = []
         for t in tables:
             if self._is_external(staging_db, t):
-                # metadata-only flip (the SET SCHEMA analog): target
-                # external table re-created at the staged files — no
-                # data movement; previous versions pruned AFTER.
+                # the SET SCHEMA analog; old versions pruned AFTER
                 path = self._table_location(staging_db, t)
                 self._sql(f"DROP TABLE IF EXISTS `{self.target_db}`.`{t}`")
                 self._create_external(self.target_db, t, path)
                 self._prune_versions(t)
-                published.append(f"{self.target_db}.{t}")
-                if on_table_published:
-                    on_table_published(t)
-                continue
-            self._reclaim_orphan_location(self.target_db, t)
-            src = self.spark.table(f"`{staging_db}`.`{t}`")
-            w = src.write.mode("overwrite")
-            if layouts and t in layouts:
-                w = layouts[t].apply(w)
-                if layouts[t].bucket_by:
-                    # saveAsTable cannot overwrite across a bucketing-
-                    # spec change, so bucketed publishes drop first.
-                    # This narrows per-table atomicity (reader gap +
-                    # loss-on-crash window) — accepted ONLY for tables
-                    # that opted into bucketing; plain tables keep the
-                    # atomic overwrite (files first, catalog flip last).
-                    self._sql(f"DROP TABLE IF EXISTS `{self.target_db}`.`{t}`")
-            w.saveAsTable(f"`{self.target_db}`.`{t}`")
-            published.append(f"{self.target_db}.{t}")
+            else:
+                self._move_managed(staging_db, t, self.target_db)
             if on_table_published:
                 on_table_published(t)
-        return published
+        return [f"{self.target_db}.{t}" for t in tables]
 
     # -- versioned (cross-table atomic) publish --------------------------------
 
@@ -405,12 +411,11 @@ class Publisher:
         self,
         staging_db: str,
         tables: list[str],
-        layouts: dict[str, TableLayout] | None = None,
         on_table_published=None,
     ) -> list[str]:
         """All-tables-one-commit publish: land EVERY table in a fresh
         version database (external tables re-point at the staged files
-        — metadata only; managed tables copy), then commit with ONE
+        — metadata only; managed tables move), then commit with ONE
         :meth:`VersionPointer.flip`. Readers resolving through the
         pointer see the previous version in full until the flip and
         the new version in full after it — the reference's
@@ -432,15 +437,7 @@ class Publisher:
                     path = self._table_location(staging_db, t)
                     self._create_external(phys, t, path)
                 else:
-                    # a same-named version db from a crashed PREVIOUS
-                    # session can leave orphaned warehouse dirs
-                    self._reclaim_orphan_location(phys, t)
-                    w = self.spark.table(
-                        f"`{staging_db}`.`{t}`"
-                    ).write.mode("overwrite")
-                    if layouts and t in layouts:
-                        w = layouts[t].apply(w)
-                    w.saveAsTable(f"`{phys}`.`{t}`")
+                    self._move_managed(staging_db, t, phys)
                 if on_table_published:
                     on_table_published(t)
         except BaseException:

@@ -31,6 +31,20 @@ def test_rowcounts(spark, cli_db, capsys):
     assert "cli_test.t1\t3" in out and "cli_test.t2\t5" in out
 
 
+def test_table_listings_skip_session_temp_views(spark, cli_db, kv, capsys):
+    """``listTables(db)`` also returns the session's temp views; the
+    per-database commands must not treat them as tables of ``db``."""
+    spark.range(2).createOrReplaceTempView("cli_temp_view")
+    try:
+        assert cli.main(["rowcounts", cli_db]) == 0
+        assert cli.main(["grant-schema-read", cli_db, "readonly"]) == 0
+    finally:
+        spark.catalog.dropTempView("cli_temp_view")
+    out = capsys.readouterr().out
+    assert "cli_test.t1\t3" in out and "cli_test.t2\t5" in out
+    assert "cli_temp_view" not in out
+
+
 def test_sql_statement(spark, cli_db, capsys):
     assert (
         cli.main(

@@ -110,6 +110,30 @@ class TestConnectedComponents:
         assert int(seen["loop_sp"]) <= int(prev_sp)
         assert spark.conf.get("spark.sql.shuffle.partitions") == prev_sp
 
+    def test_clone_for_loop_never_falls_back_to_caller_session(self, spark):
+        """``_clone_for_loop`` rebinds through pyspark-internal APIs and
+        silently degrades to the shared session if they break; pin the
+        clone so a pyspark upgrade fails here instead. While a loop
+        fence holds the clone's conf, the caller's conf is unchanged."""
+        from nycdb_k8s_loader_spark.operators import graph
+
+        df = spark.range(4).toDF("src")
+        prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
+        prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+        (loop_df,), rebase_back = graph._clone_for_loop(df)
+        loop = loop_df.sparkSession
+        assert loop is not spark
+        assert not loop._jsparkSession.equals(spark._jsparkSession)
+        with graph._iteration_sized_shuffle(loop_df, 1), graph._static_loop_plans(loop):
+            assert loop.conf.get("spark.sql.shuffle.partitions") == "1"
+            assert loop.conf.get("spark.sql.adaptive.enabled") == "false"
+            assert spark.conf.get("spark.sql.shuffle.partitions") == prev_sp
+            assert spark.conf.get("spark.sql.adaptive.enabled", "true") == prev_aqe
+            assert loop_df.count() == 4
+        back = rebase_back(loop_df)
+        assert back.sparkSession is spark
+        assert back.count() == 4
+
     def test_cluster_assignments_shape(self, spark):
         pairs = spark.createDataFrame([(5, 7), (7, 9)], "doc_a bigint, doc_b bigint")
         rows = cluster_assignments(pairs).collect()

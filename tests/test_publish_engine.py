@@ -344,7 +344,8 @@ class TestTableLayouts:
         with pub.staging("layoutds") as db:
             pub.write_staging_table(db, "ta", a, layout)
             pub.write_staging_table(db, "tb", b, layout)
-            pub.publish_tables(db, ["ta", "tb"], {"ta": layout, "tb": layout})
+            # the layout is applied once, at staging; the move keeps it
+            pub.publish_tables(db, ["ta", "tb"])
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
             joined = spark.table("layout_test.ta").join(
@@ -369,9 +370,7 @@ class TestTableLayouts:
             pub.write_staging_table(
                 db, "tp", df, TableLayout(partition_by=["part"])
             )
-            pub.publish_tables(
-                db, ["tp"], {"tp": TableLayout(partition_by=["part"])}
-            )
+            pub.publish_tables(db, ["tp"])
         try:
             q = spark.table("layout_test2.tp").filter("part = 2")
             plan = q._jdf.queryExecution().executedPlan().toString()
@@ -383,6 +382,159 @@ class TestTableLayouts:
             assert "= 2" in part_filters
         finally:
             pub.drop_db("layout_test2")
+
+
+def _dir_of(spark, db: str, table: str = "") -> str:
+    """Local path of ``db``'s directory, or of ``table`` inside it."""
+    loc = Publisher._fs_path(spark.catalog.getDatabase(db).locationUri)
+    return os.path.join(loc, table) if table else loc
+
+
+def _incoming_dirs(spark, db_prefix: str) -> list[str]:
+    """``.<t>.incoming`` leftovers in every database named ``db_prefix*``
+    (versioned mode publishes into ``<db>__v_*`` databases)."""
+    return [
+        f
+        for d in spark.catalog.listDatabases()
+        if d.name.startswith(db_prefix) and os.path.isdir(_dir_of(spark, d.name))
+        for f in os.listdir(_dir_of(spark, d.name))
+        if f.endswith(".incoming")
+    ]
+
+
+class TestMovePublish:
+    """Publish moves each staged table's directory: the data is written
+    once, at staging, and the publish itself runs no Spark job."""
+
+    def test_publish_runs_no_spark_job(self, spark):
+        from nycdb_k8s_loader_spark.publish.protocol import TableLayout
+
+        pub = Publisher(spark, target_db="move_jobs")
+        sc = spark.sparkContext
+        try:
+            with pub.staging("mvjobs") as db:
+                pub.write_staging_table(db, "plain", spark.range(50))
+                pub.write_staging_table(
+                    db, "parted", spark.range(8).selectExpr("id", "id % 2 AS p"),
+                    TableLayout(partition_by=["p"]),
+                )
+                sc.setJobGroup("publish-move", "publish only")
+                try:
+                    pub.publish_tables(db, ["plain", "parted"])
+                finally:
+                    sc.setLocalProperty("spark.jobGroup.id", None)
+            assert list(sc.statusTracker().getJobIdsForGroup("publish-move")) == []
+            assert spark.table("move_jobs.plain").count() == 50
+            assert spark.table("move_jobs.parted").filter("p = 1").count() == 4
+        finally:
+            pub.drop_db("move_jobs")
+
+    def test_published_table_is_the_staged_directory(self, spark):
+        pub = Publisher(spark, target_db="move_files")
+        try:
+            with pub.staging("mvfiles") as db:
+                pub.write_staging_table(db, "t", spark.range(30).repartition(3))
+                staged = sorted(
+                    f for f in os.listdir(_dir_of(spark, db, "t"))
+                    if f.startswith("part-")
+                )
+                pub.publish_tables(db, ["t"])
+            assert len(staged) == 3
+            assert spark.catalog.getTable("move_files.t").tableType == "MANAGED"
+            loc = spark.catalog.getDatabase("move_files").locationUri
+            assert pub._table_location("move_files", "t") == f"{loc}/t"
+            published = sorted(
+                f for f in os.listdir(_dir_of(spark, "move_files", "t"))
+                if f.startswith("part-")
+            )
+            assert published == staged
+            assert _incoming_dirs(spark, "move_files") == []
+            assert spark.table("move_files.t").count() == 30
+        finally:
+            pub.drop_db("move_files")
+
+
+class _Crash(Exception):
+    pass
+
+
+class TestMoveCrashMatrix:
+    """A failure at each step of the move: the load raises, no state
+    is persisted, the staging db is gone, and an immediate retry
+    publishes the full dataset with no ``.incoming`` left behind."""
+
+    # rows readers see right after the crash: per-table mode exposes
+    # the crash window, versioned mode never flipped the pointer
+    WINDOW = {
+        (False, "after_rename_in"): 2,
+        (False, "after_drop"): None,  # table missing
+        (False, "after_create"): 0,
+        (True, "after_rename_in"): 2,
+        (True, "after_drop"): 2,
+        (True, "after_create"): 2,
+    }
+
+    @pytest.mark.parametrize("versioned", [False, True], ids=["per_table", "versioned"])
+    @pytest.mark.parametrize("point", ["after_rename_in", "after_drop", "after_create"])
+    def test_crash_then_retry_converges(
+        self, spark, registry, landing, monkeypatch, versioned, point
+    ):
+        db = f"mvcrash_{int(versioned)}_{point}"
+        src = {"csv": CSV_V1, "etag": '"v1"'}
+
+        def downloader(url, dest):
+            with open(dest, "w") as f:
+                f.write(src["csv"])
+
+        eng = Engine(
+            spark, registry, DictKVStore(), target_db=db,
+            landing_root=landing,
+            transport=lambda url, headers: FetchResult(200, etag=src["etag"]),
+            downloader=downloader,
+            versioned_publish=versioned,
+        )
+        try:
+            eng.load("bldgs")
+            persisted = dict(eng.kv)
+            src.update(csv=CSV_V2, etag='"v2"')
+
+            orig_sql = Publisher._sql
+
+            def crashing_sql(self, stmt):
+                # the move's only DROP TABLE / CREATE TABLE statements
+                if (
+                    (point == "after_rename_in" and stmt.startswith("DROP TABLE"))
+                    or (point == "after_drop" and stmt.startswith("CREATE TABLE"))
+                ):
+                    raise _Crash(point)
+                orig_sql(self, stmt)
+                if point == "after_create" and stmt.startswith("CREATE TABLE"):
+                    raise _Crash(point)
+
+            monkeypatch.setattr(Publisher, "_sql", crashing_sql)
+            with pytest.raises(_Crash):
+                eng.load("bldgs")
+            monkeypatch.setattr(Publisher, "_sql", orig_sql)
+
+            assert dict(eng.kv) == persisted  # no validators, no tracker
+            assert Publisher(spark).list_staging_dbs("bldgs") == []
+            want = self.WINDOW[(versioned, point)]
+            if want is None:
+                assert not spark.catalog.tableExists(f"{db}.bldgs")
+            else:
+                assert eng.read_published("bldgs").count() == want
+
+            res = eng.load("bldgs")
+            assert not res.skipped
+            assert eng.read_published("bldgs").count() == 3
+            assert eng.read_published("bldg_rollup").count() == 3
+            assert eng.kv["etag:https://x/bldgs.csv"] == '"v2"'
+            assert _incoming_dirs(spark, db) == []
+            assert Publisher(spark).list_staging_dbs("bldgs") == []
+        finally:
+            for d in spark.catalog.listDatabases():
+                if d.name.startswith(db):
+                    spark.sql(f"DROP DATABASE IF EXISTS `{d.name}` CASCADE")
 
 
 class TestGrantRegistry:
